@@ -11,10 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..cells import _IX_SHIFT, _RES_SHIFT
 from ..constants import EARTH_RADIUS, EARTH_RADIUS_OFFSET
-
-_RES_SHIFT = 54
-_IX_SHIFT = 27
 
 
 def map_update(base: Column, overrides: Column) -> Column:
@@ -48,6 +46,12 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
     n = F.lit(1 << res).cast("long")
     ix = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(0)), n - 1)
     iy = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(0)), n - 1)
+    return cell_pack_col(res, ix, iy)
+
+
+def cell_pack_col(res: int, ix: Column, iy: Column) -> Column:
+    """(res, ix, iy) grid indices → int64 cell id: the cells.py bit layout
+    as Catalyst arithmetic."""
     return (
         F.shiftleft(F.lit(res).cast("long"), _RES_SHIFT)
         .bitwiseOR(F.shiftleft(ix.cast("long"), _IX_SHIFT))
@@ -238,16 +242,6 @@ def level_code_cols(col: Column) -> tuple[Column, Column]:
     return F.substring(col, 1, 1), F.substring(col, 2, 2).try_cast("int")
 
 
-def date_trunc10_col(col: Column) -> Column:
-    """'YYYY-MM-DD...' prefix slice — building2osm.py:651-653."""
-    return F.substring(col, 1, 10)
-
-
-def round7(col: Column) -> Column:
-    """Output rounding to 7 decimals — building2osm.py:36,621,1226."""
-    return F.round(col, 7)
-
-
 def in_bbox_closed_col(lon: Column, lat: Column, bbox) -> Column:
     """Column twin of geom.in_bbox_closed (≤ on all four edges)."""
     return (
@@ -265,15 +259,6 @@ def in_bbox_half_open_col(lon: Column, lat: Column, bbox) -> Column:
     """Column twin of geom.in_bbox_half_open (≤ lower edges, < upper —
     the tiling convention: every point belongs to exactly one tile)."""
     return (lon >= bbox[0]) & (lon < bbox[2]) & (lat >= bbox[1]) & (lat < bbox[3])
-
-
-def tagged_flag_col(tags: Column) -> Column:
-    """True when any tag key is beyond building/source/addr:* —
-    building_merge.py:444-448."""
-    return F.exists(
-        F.map_keys(tags),
-        lambda k: (k != "building") & (k != "source") & ~k.contains("addr:"),
-    )
 
 
 def building_retag_cadastral_col(building: Column, area: Column) -> Column:

@@ -31,13 +31,6 @@ def token_count_ws(text: Column) -> Column:
     )
 
 
-def token_count_bpe_ish(text: Column) -> Column:
-    """BPE-ish token estimate: word-boundary pieces + punctuation pieces
-    (regex split on boundaries), ~ GPT-2 pre-tokenizer granularity."""
-    pieces = F.split(text, r"(?=\s)|(?<=\s)|(?=[.,!?;:])")
-    return F.size(F.filter(pieces, lambda p: F.trim(p) != ""))
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     """Occurrences of the language's marker stopwords as standalone words.
 

@@ -34,28 +34,10 @@ POINT_STRUCT = T.StructType(
 
 
 @F.pandas_udf(T.LongType())
-def area_udf(geometry: pd.Series) -> pd.Series:
-    """|outer-ring area| m², R=6371000 (building2osm.py:120-137 + abs at :543)."""
-    return pd.Series(
-        [abs(G.polygon_area(_ring(g[0]))) if g is not None and len(g) else 0 for g in geometry],
-        dtype="int64",
-    )
-
-
-@F.pandas_udf(T.LongType())
 def area_merge_udf(geometry: pd.Series) -> pd.Series:
     """|outer-ring area| m², R=6371009 (building_merge.py:134-151 + abs :352)."""
     return pd.Series(
         [abs(G.polygon_area_merge(_ring(g[0]))) if g is not None and len(g) else 0 for g in geometry],
-        dtype="int64",
-    )
-
-
-@F.pandas_udf(T.LongType())
-def signed_area_udf(geometry: pd.Series) -> pd.Series:
-    """Signed outer-ring area (orientation: <0 clockwise)."""
-    return pd.Series(
-        [G.polygon_area(_ring(g[0])) if g is not None and len(g) else 0 for g in geometry],
         dtype="int64",
     )
 

@@ -78,15 +78,6 @@ def bearing_turn(p1: np.ndarray, p2: np.ndarray, p3: np.ndarray) -> np.ndarray:
     return bearing_difference(bearing(p1, p2), bearing(p2, p3))
 
 
-def ring_turns(ring: np.ndarray) -> np.ndarray:
-    """Turn angle at each interior vertex i (1..N-2) of a closed ring.
-
-    Returns (N-2,) array: turns at ring[1], ..., ring[N-2] — the loop range
-    of the curve scan at building2osm.py:810-811.
-    """
-    return bearing_turn(ring[:-2], ring[1:-1], ring[2:])
-
-
 def coordinate_offset(points: np.ndarray, dist_m: float) -> np.ndarray:
     """Shift (lon, lat) by dist_m metres in both axes. building_merge.py:211-218."""
     points = np.asarray(points, dtype=np.float64)
@@ -203,23 +194,6 @@ def centroid_polygon(polygon: list[np.ndarray]) -> tuple[float, float]:
             area_sum -= inner_area
         return cx / area_sum, cy / area_sum
     return cx0, cy0
-
-
-# ---------------------------------------------------------------------------
-# rotation
-# ---------------------------------------------------------------------------
-
-def rotate_nodes(axis: tuple[float, float], angle_deg: float, points: np.ndarray) -> np.ndarray:
-    """Rotate points around axis with cos(lat) x-scaling. building2osm.py:200-213."""
-    points = np.asarray(points, dtype=np.float64)
-    r = angle_deg * RAD
-    cos_axis = np.cos(axis[1] * RAD)
-    tr_x = (points[..., 0] - axis[0]) * cos_axis
-    tr_y = points[..., 1] - axis[1]
-    cr, sr = np.cos(r), np.sin(r)
-    xrot = tr_x * cr - tr_y * sr
-    yrot = tr_x * sr + tr_y * cr
-    return np.stack([xrot / cos_axis + axis[0], yrot + axis[1]], axis=-1)
 
 
 # ---------------------------------------------------------------------------
@@ -466,15 +440,6 @@ def points_in_multipolygon(points: np.ndarray, multipolygon: list[list[np.ndarra
 # ---------------------------------------------------------------------------
 # bbox predicates — THREE distinct inequality conventions (SURVEY.md P5)
 # ---------------------------------------------------------------------------
-
-def bbox_of_ring(ring: np.ndarray) -> tuple[float, float, float, float]:
-    """(minlon, minlat, maxlon, maxlat)."""
-    ring = np.asarray(ring, dtype=np.float64)
-    return (
-        float(ring[:, 0].min()), float(ring[:, 1].min()),
-        float(ring[:, 0].max()), float(ring[:, 1].max()),
-    )
-
 
 def in_bbox_closed(points: np.ndarray, bbox) -> np.ndarray:
     """min <= p <= max — municipality_split.py:185-187."""

@@ -44,11 +44,13 @@ from ..constants import (
 )
 from ..functions.columns import (
     cell_id_col,
+    cell_pack_col,
     coordinate_offset_cols,
     map_update,
     map_update_fixed,
 )
 from ..functions.udfs import format1f_udf, format2f_udf, hausdorff_udf
+from .components import components
 
 # cell resolution for the candidate join: cells ≈ 150 m ≫ 2×10 m margin,
 # so a 3×3 block around one centre always covers the other's bbox test
@@ -56,8 +58,13 @@ CONFLATE_RES = 17
 
 # Safety factor on the fringe threshold of _fringe_cells: covers the
 # cos(o_lat) vs cos(i_lat) difference in the forward bbox's longitude
-# shrink (|Δlat| ≤ 2·margin_deg ≈ 3.2e-6 rad, so the true ratio is
-# ≤ 1.0001 anywhere cos(lat) ≥ 0.01) plus edge-coordinate float error.
+# shrink plus edge-coordinate float error. Partners differ in latitude by
+# at most δ = 2·margin_m / R_offset radians (≈3.1e-6 at the 10 m margin),
+# so cos(lat)/cos(lat±δ) ≤ 1/(1 − δ·tan|lat|) ≈ 1 + δ/cos(lat): the ratio
+# is ≤ 1.0001 only where cos(lat) ≥ ~0.03 (|lat| ≲ 88.2°), and the 1.001
+# slack stops holding once δ/cos(lat) nears 0.001 (|lat| ≈ 89.8°).
+# _fringe_cells therefore keeps both east-west neighbours unconditionally
+# where δ/cos(lat) exceeds half the slack (|lat| ≳ 89.64° at 10 m).
 _FRINGE_SLACK = 1.001
 
 
@@ -75,7 +82,9 @@ def _fringe_cells(lon, lat, res: int, margin_m: float):
     coordinate_offset_cols does (metres / ((π/180)·R_offset) degrees).
     A neighbour cell can therefore only contain a surviving partner if
     this point lies within d (resp. d/cos·slack for longitude) of that
-    border; _FRINGE_SLACK absorbs the cos(o_lat)≠cos(i_lat) gap. Cells
+    border; _FRINGE_SLACK absorbs the cos(o_lat)≠cos(i_lat) gap away
+    from the poles, and past its cos(lat) floor both east-west
+    neighbours are always kept (see _FRINGE_SLACK). Cells
     clamp at the grid edge exactly like cell_id_col; duplicates from
     clamping collapse via array_distinct (same convention as
     _neighbors9). Differentially tested against _neighbors9 on random +
@@ -89,22 +98,22 @@ def _fringe_cells(lon, lat, res: int, margin_m: float):
         2.0 * margin_m / ((3.141592653589793 / 180.0) * EARTH_RADIUS_OFFSET)
         * _FRINGE_SLACK
     )
-    thr_lon = d_deg / F.cos(F.radians(lat))
+    cos_lat = F.cos(F.radians(lat))
+    polar = cos_lat < F.lit(
+        2.0 * (2.0 * margin_m / EARTH_RADIUS_OFFSET) / (_FRINGE_SLACK - 1.0)
+    )
+    thr_lon = d_deg / cos_lat
     west_edge = ix * cell_w - F.lit(180.0)
     south_edge = iy * cell_h - F.lit(90.0)
-    near_e = (west_edge + cell_w - lon) <= thr_lon
-    near_w = (lon - west_edge) <= thr_lon
+    near_e = polar | ((west_edge + cell_w - lon) <= thr_lon)
+    near_w = polar | ((lon - west_edge) <= thr_lon)
     near_n = (south_edge + cell_h - lat) <= d_deg
     near_s = (lat - south_edge) <= d_deg
 
     def cell(jx, jy):
         cx = F.least(F.greatest(jx, F.lit(0)), n - 1)
         cy = F.least(F.greatest(jy, F.lit(0)), n - 1)
-        return (
-            F.shiftleft(F.lit(res).cast("long"), 54)
-            .bitwiseOR(F.shiftleft(cx.cast("long"), 27))
-            .bitwiseOR(cy.cast("long"))
-        )
+        return cell_pack_col(res, cx, cy)
 
     guarded = [
         F.when(near_w, cell(ix - 1, iy)),
@@ -391,84 +400,6 @@ def _mutual_best(
     )
 
 
-_GREEDY_DRIVER_MAX = 1_000_000  # distinct candidate pairs; ids only, ~60 MB
-
-
-def _pair_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(osm_id, component) over the bipartite candidate-pair graph —
-    component id = min i_ref reachable. Below _GREEDY_DRIVER_MAX distinct
-    pairs: one collect + union-find (ids only — the candidate graph is
-    sparse, ≈1-3 edges per building). Above: alternating min-label
-    propagation (rounds ≈ component diameter / 2), raising on
-    non-convergence rather than silently splitting a component."""
-    e = pairs.select("osm_id", "i_ref").distinct().persist()
-    n = e.count()
-    if n <= _GREEDY_DRIVER_MAX:
-        rows = e.collect()
-        e.unpersist()
-        parent: dict[object, object] = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ra, rb = find(("o", r["osm_id"])), find(("i", r["i_ref"]))
-            if ra != rb:
-                parent[rb] = ra
-        comp_min: dict[object, str] = {}
-        for r in rows:
-            root = find(("o", r["osm_id"]))
-            if comp_min.get(root) is None or r["i_ref"] < comp_min[root]:
-                comp_min[root] = r["i_ref"]
-        mapping = sorted(
-            {(r["osm_id"], comp_min[find(("o", r["osm_id"]))]) for r in rows}
-        )
-        return pairs.sparkSession.createDataFrame(
-            mapping, schema="osm_id long, component string"
-        )
-    lab_o = e.groupBy("osm_id").agg(F.min("i_ref").alias("component")).persist()
-    for _ in range(max_iter):
-        lab_i = (
-            e.join(lab_o, "osm_id")
-            .groupBy("i_ref")
-            .agg(F.min("component").alias("component"))
-        )
-        new_o = (
-            e.join(lab_i, "i_ref")
-            .groupBy("osm_id")
-            .agg(F.min("component").alias("component"))
-            .persist()
-        )
-        changed = (
-            new_o.join(lab_o.withColumnRenamed("component", "__old"), "osm_id")
-            .filter(F.col("component") != F.col("__old"))
-            .count()
-        )
-        lab_o.unpersist()
-        lab_o = new_o
-        if changed == 0:
-            # hand back ContextCleaner-managed blocks, not a persist that
-            # would outlive the call in a long-lived session (engine
-            # persist-hygiene convention); cheap — (osm_id, component)
-            # rows read straight from the still-cached lab_o
-            out = lab_o.localCheckpoint(eager=True)
-            lab_o.unpersist()
-            e.unpersist()
-            return out
-    # non-convergence must not leave blocks pinned for the session's life
-    lab_o.unpersist()
-    e.unpersist()
-    raise RuntimeError(
-        f"_pair_components: label propagation did not converge in {max_iter} "
-        "rounds — raise max_iter (component diameter exceeds it)"
-    )
-
-
 def _greedy_grouped(
     osm: DataFrame,
     imports: DataFrame,
@@ -498,8 +429,19 @@ def _greedy_grouped(
     else:
         scored = scored.withColumn("__i_ord", F.col("i_ref"))
     scored = scored.localCheckpoint(eager=False)
-    comp = _pair_components(scored)
-    return scored.join(comp, "osm_id")
+    # the bipartite candidate graph projected onto i_ref: a star per
+    # osm_id around its hub (min i_ref) keeps the connectivity, and the
+    # component id stays the min i_ref reachable
+    stars = (
+        scored.groupBy("osm_id")
+        .agg(F.collect_set("i_ref").alias("__refs"))
+        .select("osm_id", F.array_min("__refs").alias("__hub"), "__refs")
+    )
+    comp = components(
+        stars.select(F.col("__hub").alias("a"), F.explode("__refs").alias("b"))
+    )
+    osm_comp = stars.join(comp.withColumnRenamed("node", "__hub"), "__hub")
+    return scored.join(osm_comp.select("osm_id", "component"), "osm_id")
 
 
 def conflate_greedy(

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Column
 
 from .. import geom as G
+from ..cells import _COORD_MASK, _IX_SHIFT, _RES_SHIFT
 from ..constants import DEFAULT_CELL_RES
 from ..functions.columns import cell_id_col
 from ..functions.udfs import make_cover_udf, make_multipolygon_cover_udf, _polygon
@@ -204,7 +205,7 @@ def _cover_levels(cov: DataFrame) -> list[int]:
     return sorted(
         r[0]
         for r in cov.select(
-            F.shiftrightunsigned("cell", 54).cast("int").alias("r")
+            F.shiftrightunsigned("cell", _RES_SHIFT).cast("int").alias("r")
         )
         .distinct()
         .collect()
@@ -218,14 +219,14 @@ def _drop_shadowed_cells(
     that have a same-feature ancestor also in the cover (the ancestor
     spatially contains them — keeping both would double-match any point in
     the fine cell). Slim self-join on (poly_id, cell) only."""
-    m = (1 << 27) - 1
+    m, rs, xs = _COORD_MASK, _RES_SHIFT, _IX_SHIFT
     lvls = ",".join(str(x) for x in levels[:-1])
     anc_expr = (
-        f"transform(filter(array({lvls}), L -> L < shiftright(cell, 54)),"
-        f" L -> shiftleft(CAST(L AS BIGINT), 54)"
-        f" | shiftleft(shiftright(shiftright(cell, 27) & {m},"
-        f"   CAST(shiftright(cell, 54) - L AS INT)), 27)"
-        f" | shiftright(cell & {m}, CAST(shiftright(cell, 54) - L AS INT)))"
+        f"transform(filter(array({lvls}), L -> L < shiftright(cell, {rs})),"
+        f" L -> shiftleft(CAST(L AS BIGINT), {rs})"
+        f" | shiftleft(shiftright(shiftright(cell, {xs}) & {m},"
+        f"   CAST(shiftright(cell, {rs}) - L AS INT)), {xs})"
+        f" | shiftright(cell & {m}, CAST(shiftright(cell, {rs}) - L AS INT)))"
     )
     anc = cov.select(
         poly_id, "cell", F.explode(F.expr(anc_expr)).alias("__anc")
@@ -417,7 +418,7 @@ def assign_points_to_polygons(
             # cover_polygon's max_cells res-lowering for huge polygons)
             # yields mixed-res covers; a single-res probe would silently
             # miss every cover cell at another resolution
-            levels = sorted({int(c) >> 54 for (c, *_rest) in side_rows}) or [res]
+            levels = sorted({int(c) >> _RES_SHIFT for (c, *_rest) in side_rows}) or [res]
             pts = multi_res_probe(levels)
         else:
             # the cover can be mixed-resolution even before compaction

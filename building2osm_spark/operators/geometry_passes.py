@@ -2,13 +2,15 @@
 
 Spark shape of the passes whose pure kernels live in geopasses.py:
 
-  stage 1  connected components over shared vertices — iterative label
-           propagation (the one genuinely graph-shaped op, J10): labels
-           converge in O(diameter) rounds and building clusters are tiny,
-           so 2-4 rounds suffice; each round is two hash aggregations;
-  stage 2  groupBy(component).applyInPandas(rectify kernel) — each group
-           enters the kernel exactly once (the reference's 'rectified'
-           memo X5 is free in dataflow form);
+  stage 1  shared-vertex census: groupBy(vertex).collect_set(ref), sets
+           of size > 1 — it splits the singleton majority (map-only
+           kernels, no shuffle) from the buildings that share a vertex,
+           and its sets become star edges for operators/components.py
+           (the one genuinely graph-shaped op, J10);
+  stage 2  repartition(component) + sortWithinPartitions + mapInPandas:
+           each component enters the rectify kernel exactly once (the
+           reference's 'rectified' memo X5 is free in dataflow form),
+           paying the Arrow/pandas cost once per batch, not per group;
   stage 3  simplify census: explode all post-rectify vertices (closing
            duplicate INCLUDED — reference quirk, building2osm.py:786-792)
            → groupBy(vertex).count();
@@ -19,6 +21,7 @@ Spark shape of the passes whose pure kernels live in geopasses.py:
            each building's own removable subset back (vertex-keyed then
            ref-keyed shuffles — never a driver-side set at scale).
 
+rectify_and_simplify fuses stages 2-5 per component (see its docstring).
 The reference's shared mutable dicts (`nodes`, `remove_nodes`,
 building2osm.py:779-794,870-896) become DataFrames; semantics are
 identical (verified against geopasses.apply_passes, which is itself
@@ -33,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geopasses as GP
+from . import components as CC
+
 
 def _to_rings(geometry) -> list[list[tuple[float, float]]]:
     return [[(p[0], p[1]) for p in ring] for ring in geometry]
@@ -53,8 +58,6 @@ def _explode_vertices(df: DataFrame, include_closing: bool) -> DataFrame:
     )
 
 
-_CC_DRIVER_MAX = 1_000_000  # vertex rows; ~50 MB collected
-
 # Rows per task for the grouped Python-kernel repartition. The kernel is
 # compute-bound (~1 ms/building of pure-Python parity kernel), not
 # byte-bound (~100 B/row of packed geometry), so AQE's byte-based
@@ -72,93 +75,41 @@ def _kernel_partitions(spark, n_rows: int) -> int:
     return max(1, min(shuffle_n, n_rows // _KERNEL_ROWS_PER_TASK + 1))
 
 
+def _shared_vertex_edges(df: DataFrame) -> DataFrame:
+    """Star edges (a = min ref, b = ref) of every vertex that more than one
+    building uses — the shared-vertex census as a components() edge list.
+    A star per shared vertex keeps its ref set connected."""
+    return (
+        _explode_vertices(df, include_closing=False)
+        .groupBy("vlon", "vlat")
+        .agg(F.collect_set("ref").alias("__refs"))
+        .filter(F.size("__refs") > 1)
+        .select(F.array_min("__refs").alias("a"), F.explode("__refs").alias("b"))
+    )
+
+
+def _grouped_components(df: DataFrame) -> tuple[DataFrame, int]:
+    """(ref, component) for the buildings that share a vertex with
+    another building, and their count; component = min member ref.
+
+    A table no larger than what components() resolves on the driver is
+    broadcast, so the singles/grouped split joins shuffle nothing; a
+    larger one is left to the planner."""
+    comps = CC.components(_shared_vertex_edges(df)).withColumnRenamed("node", "ref")
+    n = comps.count()  # materialized — the count is cheap
+    return (F.broadcast(comps) if n <= CC._DRIVER_MAX_EDGES else comps), n
+
+
 def connected_components(df: DataFrame, max_iter: int = 20) -> DataFrame:
     """(ref, component) via shared-vertex connectivity.
-    Component id = lexicographically smallest member ref.
-
-    Two physical strategies, same result: below _CC_DRIVER_MAX distinct
-    (ref, vertex) rows the graph collects to the driver for a union-find
-    (one job, no iterative shuffles — shared-vertex subsets are a few
-    percent of a municipality, and label propagation's per-round
-    join+agg+count latency dominates at that size); above it, distributed
-    min-label propagation (rounds ≈ component diameter, AQE-coalesced).
-    """
-    verts = _explode_vertices(df, include_closing=False).distinct().persist()
-    n_rows = verts.count()
-    if n_rows <= _CC_DRIVER_MAX:
-        rows = verts.collect()
-        verts.unpersist()
-        parent: dict[object, object] = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-
-        for r in rows:
-            union(("r", r["ref"]), ("v", r["vlon"], r["vlat"]))
-        comp_min: dict[object, str] = {}
-        refs = {r["ref"] for r in rows}
-        for ref in refs:
-            root = find(("r", ref))
-            if comp_min.get(root) is None or ref < comp_min[root]:
-                comp_min[root] = ref
-        mapping = [(ref, comp_min[find(("r", ref))]) for ref in sorted(refs)]
-        return df.sparkSession.createDataFrame(
-            mapping, schema="ref string, component string"
-        )
-    labels = df.select("ref").withColumn("component", F.col("ref")).persist()
-    converged = False
-    for _ in range(max_iter):
-        vertex_label = (
-            verts.join(labels, "ref")
-            .groupBy("vlon", "vlat")
-            .agg(F.min("component").alias("vlabel"))
-        )
-        # persist each generation: the convergence check and the next
-        # round both read it; without this, lineage re-executes all
-        # previous rounds per action
-        new_labels = (
-            verts.join(vertex_label, ["vlon", "vlat"])
-            .groupBy("ref")
-            .agg(F.min("vlabel").alias("component"))
-        ).persist()
-        changed = (
-            labels.alias("a")
-            .join(new_labels.alias("b"), "ref")
-            .filter(F.col("a.component") != F.col("b.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    verts.unpersist()
-    if not converged:
-        # an unconverged result SPLITS physical components (the min label
-        # has only walked max_iter ref→vertex→ref hops) — rectify would
-        # then run on partial groups and silently diverge from the
-        # reference; a long terrace chain legitimately needs more rounds
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components: min-label propagation did not converge "
-            f"in {max_iter} rounds (component diameter > ~{2 * max_iter}); "
-            f"re-run with a larger max_iter"
-        )
-    # hand back materialized blocks (ContextCleaner-managed), not a
-    # CacheManager entry the caller would have to remember to release
-    out = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    return out
+    Component id = lexicographically smallest member ref; a building that
+    shares no vertex labels itself."""
+    comps = CC.components(_shared_vertex_edges(df), max_iter)
+    return (
+        df.select("ref")
+        .join(comps.withColumnRenamed("node", "ref"), "ref", "left")
+        .select("ref", F.coalesce("component", "ref").alias("component"))
+    )
 
 
 GEOM_T = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
@@ -174,54 +125,67 @@ _RECTIFY_SCHEMA = T.StructType(
 )
 
 
-def _grouped_rectify_mapper(batches):
-    """Run _rectify_kernel per component over component-sorted partitions.
+def _map_components(
+    grouped: DataFrame, kernel, schema: T.StructType, n_rows: int
+) -> DataFrame:
+    """Run kernel(pdf) once per component of grouped(ref, geometry,
+    component) and union the frames it returns.
 
     applyInPandas with many tiny groups pays ~ms of Arrow/pandas overhead
     PER GROUP (measured 23 s for 25k buildings in 5k terrace components);
     here each Arrow batch is ONE pandas frame and components group inside
-    it. A component can straddle two batches of the same partition
-    (sortWithinPartitions makes it contiguous), so the trailing component
-    of every batch is carried into the next and flushed at the end."""
-    carry = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        last = pdf["component"].iloc[-1]
-        tail_mask = pdf["component"] == last
-        carry = pdf[tail_mask]
-        body = pdf[~tail_mask]
-        if len(body):
-            yield pd.concat(
-                [_rectify_kernel(sub) for _, sub in body.groupby("component", sort=False)],
-                ignore_index=True,
-            )
-    if carry is not None and len(carry):
-        yield pd.concat(
-            [_rectify_kernel(sub) for _, sub in carry.groupby("component", sort=False)],
+    it. The shuffle is sized by rows (see _KERNEL_ROWS_PER_TASK), not by
+    AQE's bytes. A component can straddle two batches of the same
+    partition (sortWithinPartitions makes it contiguous), so the trailing
+    component of every batch is carried into the next and flushed at the
+    end."""
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat(
+            [kernel(sub) for _, sub in pdf.groupby("component", sort=False)],
             ignore_index=True,
         )
 
+    def mapper(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None and len(carry):
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            tail_mask = pdf["component"] == pdf["component"].iloc[-1]
+            carry = pdf[tail_mask]
+            body = pdf[~tail_mask]
+            if len(body):
+                yield run(body)
+        if carry is not None and len(carry):
+            yield run(carry)
 
-def _rectify_components(
-    grouped_with_comp: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
-    """(…, component) → rectified rows; component-clustered mapInPandas.
-
-    num_partitions sizes the component shuffle for the compute-bound
-    kernel (see _KERNEL_ROWS_PER_TASK); when the caller does not know the
-    row count, fall back to the session's shuffle parallelism — NOT an
-    AQE-coalescible keyless repartition, which sizes by bytes and
-    serializes the Python kernel onto 1-2 cores for compact geometry."""
-    if num_partitions is None:
-        num_partitions = int(
-            grouped_with_comp.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
     return (
-        grouped_with_comp.repartition(num_partitions, "component")
+        grouped.repartition(_kernel_partitions(grouped.sparkSession, n_rows), "component")
         .sortWithinPartitions("component", "ref")
-        .mapInPandas(_grouped_rectify_mapper, schema=_RECTIFY_SCHEMA)
+        .mapInPandas(mapper, schema=schema)
     )
+
+
+def _split_by_component(
+    df: DataFrame, singles_kernel, group_kernel, schema: T.StructType
+) -> DataFrame:
+    """Buildings that share no vertex → singles_kernel, map-only; the
+    shared-vertex components → group_kernel once per component."""
+    comps, n_grouped = _grouped_components(df)
+    singles_out = (
+        df.join(comps, "ref", "left_anti")
+        .select("ref", "geometry")
+        .mapInPandas(singles_kernel, schema=schema)
+    )
+    if n_grouped == 0:
+        return singles_out
+    grouped_out = _map_components(
+        df.join(comps, "ref").select("ref", "geometry", "component"),
+        group_kernel,
+        schema,
+        n_grouped,
+    )
+    return singles_out.unionByName(grouped_out)
 
 
 def _rectify_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -265,32 +229,11 @@ def rectify(df: DataFrame) -> DataFrame:
     Split plan: buildings sharing NO vertex with another building (the vast
     majority) are singleton components — they rectify in a map-only
     mapInPandas pass with no shuffle; only buildings with shared vertices
-    enter label propagation + the grouped kernel. Same kernels, same
+    enter the components + grouped kernel path. Same kernels, same
     results (the group census of a singleton is its own vertices)."""
-    verts = _explode_vertices(df, include_closing=False)
-    # single-pass census: collect the ref set per vertex, explode the >1
-    # sets — no second pass over the exploded vertices
-    shared_refs = (
-        verts.groupBy("vlon", "vlat")
-        .agg(F.collect_set("ref").alias("__refs"))
-        .filter(F.size("__refs") > 1)
-        .select(F.explode("__refs").alias("ref"))
-        .distinct()
+    return _split_by_component(
+        df, _rectify_singles_kernel, _rectify_kernel, _RECTIFY_SCHEMA
     )
-    singles = df.join(shared_refs, "ref", "left_anti")
-    grouped = df.join(shared_refs, "ref", "left_semi")
-
-    singles_out = singles.select("ref", "geometry").mapInPandas(
-        _rectify_singles_kernel, schema=_RECTIFY_SCHEMA
-    )
-    comps = connected_components(grouped)
-    # comps is materialized (driver-built or localCheckpointed), so the
-    # count is free — it sizes the kernel shuffle by rows, not bytes
-    grouped_out = _rectify_components(
-        grouped.join(comps, "ref"),
-        num_partitions=_kernel_partitions(df.sparkSession, comps.count()),
-    )
-    return singles_out.unionByName(grouped_out)
 
 
 _MARKS_SCHEMA = T.StructType(
@@ -478,30 +421,6 @@ def _fused_group_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _grouped_fused_mapper(batches):
-    """Component-clustered fused rectify+simplify (same carry-buffer shape
-    as _grouped_rectify_mapper — see its docstring for why not
-    applyInPandas)."""
-    carry = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        last = pdf["component"].iloc[-1]
-        tail_mask = pdf["component"] == last
-        carry = pdf[tail_mask]
-        body = pdf[~tail_mask]
-        if len(body):
-            yield pd.concat(
-                [_fused_group_kernel(sub) for _, sub in body.groupby("component", sort=False)],
-                ignore_index=True,
-            )
-    if carry is not None and len(carry):
-        yield pd.concat(
-            [_fused_group_kernel(sub) for _, sub in carry.groupby("component", sort=False)],
-            ignore_index=True,
-        )
-
-
 def rectify_and_simplify(df: DataFrame) -> DataFrame:
     """Full pass pipeline: df(ref, geometry) → (ref, geometry, rectified,
     n_removed). Equivalent to process_municipality's rectify+simplify
@@ -509,9 +428,9 @@ def rectify_and_simplify(df: DataFrame) -> DataFrame:
 
     Plan shape: the singleton majority (no shared vertices) runs the FUSED
     map-only kernel — scan → mapInPandas, zero shuffles, no census joins —
-    while only the shared-vertex minority takes the global path (label
-    propagation + group kernels + cross-building census). The split itself
-    is one vertex-census shuffle. At 100k fixture buildings this is ~4×
+    while only the shared-vertex minority takes the grouped path
+    (components + one fused kernel per component). The split itself is
+    one vertex-census shuffle. At 100k fixture buildings this is ~4×
     the unified path's throughput; results are identical.
 
     The shared-vertex minority runs the SAME fused kernel per connected
@@ -521,81 +440,8 @@ def rectify_and_simplify(df: DataFrame) -> DataFrame:
     one repartition by component → fused kernel. The staged
     rectify()/simplify() pair remains as the composable API surface.
 
-    Component derivation reuses the split census: every shared vertex's
-    ref-set IS a hyperedge of the connectivity graph, so below
-    _CC_DRIVER_MAX shared vertices a driver union-find over the collected
-    ref-sets yields the components with zero extra shuffles (the census
-    aggregation already ran); above it, the distributed label-propagation
-    path (connected_components) takes over."""
-    verts = _explode_vertices(df, include_closing=False)
-    # single-pass census: collect the ref set per vertex, keep only the
-    # >1 sets (the connectivity hyperedges)
-    shared_sets = (
-        verts.groupBy("vlon", "vlat")
-        .agg(F.collect_set("ref").alias("__refs"))
-        .filter(F.size("__refs") > 1)
-        .select("__refs")
-        .persist()
+    Components come from the same census that makes the split
+    (_grouped_components), so the shared vertices are exploded once."""
+    return _split_by_component(
+        df, _rectify_simplify_singles_kernel, _fused_group_kernel, _REMOVE_SCHEMA
     )
-    n_edges = shared_sets.count()
-    spark = df.sparkSession
-    if n_edges == 0:
-        shared_sets.unpersist()
-        return df.select("ref", "geometry").mapInPandas(
-            _rectify_simplify_singles_kernel, schema=_REMOVE_SCHEMA
-        )
-    if n_edges <= _CC_DRIVER_MAX:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        seen: set[str] = set()
-        for row in shared_sets.collect():
-            refs = row["__refs"]
-            seen.update(refs)
-            r0 = find(refs[0])
-            for ref in refs[1:]:
-                r1 = find(ref)
-                if r0 != r1:
-                    # keep the lexicographically smaller root so the
-                    # component id is the min member ref (CC contract)
-                    if r1 < r0:
-                        r0, r1 = r1, r0
-                    parent[r1] = r0
-        shared_sets.unpersist()
-        n_grouped = len(seen)
-        comps = F.broadcast(
-            spark.createDataFrame(
-                [(ref, find(ref)) for ref in sorted(seen)],
-                schema="ref string, component string",
-            )
-        )
-    else:
-        shared_refs = shared_sets.select(
-            F.explode("__refs").alias("ref")
-        ).distinct()
-        comps = connected_components(df.join(shared_refs, "ref", "left_semi"))
-        n_grouped = comps.count()  # materialized — free
-        shared_sets.unpersist()
-
-    singles = df.join(comps, "ref", "left_anti")
-    grouped = df.join(comps, "ref")
-
-    singles_out = singles.select("ref", "geometry").mapInPandas(
-        _rectify_simplify_singles_kernel, schema=_REMOVE_SCHEMA
-    )
-    grouped_out = (
-        grouped.select("ref", "geometry", "component")
-        # row-count-derived N (see _KERNEL_ROWS_PER_TASK): a village stays
-        # one task, a 100k run keeps full kernel parallelism
-        .repartition(_kernel_partitions(spark, n_grouped), "component")
-        .sortWithinPartitions("component", "ref")
-        .mapInPandas(_grouped_fused_mapper, schema=_REMOVE_SCHEMA)
-    )
-    return singles_out.unionByName(grouped_out)

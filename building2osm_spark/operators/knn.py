@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..constants import DEFAULT_CELL_RES, EARTH_RADIUS
-from ..functions.columns import cell_id_col, distance_m_col
+from ..functions.columns import cell_id_col, cell_pack_col, distance_m_col
 
 _M_PER_DEG = 3.141592653589793 * EARTH_RADIUS / 180.0  # equirect metre/degree
 _BROADCAST_MAX_ROWS = 2_000_000  # ~50 MB of (id, lon, lat) — safe to ship
@@ -58,11 +58,7 @@ def _neighbors9(lon, lat, res: int):
         for dy in (-1, 0, 1):
             jx = F.least(F.greatest(ix + dx, F.lit(0)), n - 1)
             jy = F.least(F.greatest(iy + dy, F.lit(0)), n - 1)
-            cells.append(
-                F.shiftleft(F.lit(res).cast("long"), 54)
-                .bitwiseOR(F.shiftleft(jx.cast("long"), 27))
-                .bitwiseOR(jy.cast("long"))
-            )
+            cells.append(cell_pack_col(res, jx, jy))
     return F.array_distinct(F.array(*cells))
 
 

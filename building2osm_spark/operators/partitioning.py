@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cells import _COORD_MASK, _IX_SHIFT, _RES_SHIFT
 from ..constants import DEFAULT_CELL_RES, MAX_DOWNLOAD
-from ..functions.columns import cell_id_col
+from ..functions.columns import cell_id_col, cell_pack_col
 
 SPLIT_FACTOR = 0.95  # building2osm.py:456-459,496 — split at ≥0.95 × target
 
@@ -67,7 +68,6 @@ def adaptive_cells(
         levels.append(r)
         r = min(r + 2, 26)
 
-    idx_mask = (1 << 27) - 1
     splits: list[DataFrame] = []  # (cell) at levels[k] that split further
     for k, res in enumerate(levels[:-1]):
         hot = (
@@ -77,12 +77,12 @@ def adaptive_cells(
         )
         if k > 0:
             shift = res - levels[k - 1]
-            ix = F.shiftrightunsigned("cell", 27).bitwiseAND(F.lit(idx_mask))
-            iy = F.col("cell").bitwiseAND(F.lit(idx_mask))
-            parent = (
-                F.shiftleft(F.lit(levels[k - 1]).cast("long"), 54)
-                .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, shift), 27))
-                .bitwiseOR(F.shiftrightunsigned(iy, shift))
+            ix = F.shiftrightunsigned("cell", _IX_SHIFT).bitwiseAND(F.lit(_COORD_MASK))
+            iy = F.col("cell").bitwiseAND(F.lit(_COORD_MASK))
+            parent = cell_pack_col(
+                levels[k - 1],
+                F.shiftrightunsigned(ix, shift),
+                F.shiftrightunsigned(iy, shift),
             )
             hot = hot.join(
                 F.broadcast(splits[k - 1].withColumnRenamed("cell", "__parent")),
@@ -195,14 +195,14 @@ def partition_metrics(df: DataFrame) -> DataFrame:
 
 def cell_parent_col(cell: Column) -> Column:
     """Parent cell id (one resolution up) as pure Catalyst bit arithmetic —
-    the Column twin of cells.cell_parent (same packing: res<<54|ix<<27|iy)."""
-    mask = F.lit((1 << 27) - 1)
-    res = F.shiftrightunsigned(cell, 54)
-    ix = F.shiftrightunsigned(cell, 27).bitwiseAND(mask)
+    the Column twin of cells.cell_parent (same packing)."""
+    mask = F.lit(_COORD_MASK)
+    res = F.shiftrightunsigned(cell, _RES_SHIFT)
+    ix = F.shiftrightunsigned(cell, _IX_SHIFT).bitwiseAND(mask)
     iy = cell.bitwiseAND(mask)
     return (
-        F.shiftleft((res - F.lit(1)).cast("long"), 54)
-        .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, 1), 27))
+        F.shiftleft((res - F.lit(1)).cast("long"), _RES_SHIFT)
+        .bitwiseOR(F.shiftleft(F.shiftrightunsigned(ix, 1), _IX_SHIFT))
         .bitwiseOR(F.shiftrightunsigned(iy, 1))
     )
 
@@ -247,7 +247,7 @@ def compact_cover(
     for _ in range(levels):
         with_parent = cur.withColumn("__parent", cell_parent_col(F.col(cell_col)))
         promoted = (
-            with_parent.filter(F.shiftrightunsigned(F.col(cell_col), 54) > 0)
+            with_parent.filter(F.shiftrightunsigned(F.col(cell_col), _RES_SHIFT) > 0)
             .groupBy(*gcols, "__parent")
             .agg(F.count("*").alias("__n"))
             .filter(F.col("__n") == 4)
@@ -273,10 +273,10 @@ def uncompact_cover(
     Python wrapper doesn't). Cells FINER than `res` raise at execution —
     they have no ancestor row at `res` that preserves coverage semantics.
     """
-    m = (1 << 27) - 1
+    m = _COORD_MASK
     other = [x for x in cover.columns if x != cell_col]
     prefix = [F.col(x) for x in other]
-    r = F.shiftrightunsigned(F.col(cell_col), 54)
+    r = F.shiftrightunsigned(F.col(cell_col), _RES_SHIFT)
     base = cover.withColumn(
         cell_col,
         F.when(
@@ -289,7 +289,7 @@ def uncompact_cover(
     )
     return (
         base.withColumn("__d", (F.lit(res).cast("long") - r).cast("int"))
-        .withColumn("__ix", F.expr(f"shiftright({cell_col}, 27) & {m}"))
+        .withColumn("__ix", F.expr(f"shiftright({cell_col}, {_IX_SHIFT}) & {m}"))
         .withColumn("__iy", F.expr(f"{cell_col} & {m}"))
         .withColumn(
             "__cix",
@@ -310,7 +310,8 @@ def uncompact_cover(
         .select(
             *prefix,
             F.expr(
-                f"shiftleft(CAST({res} AS BIGINT), 54) | shiftleft(__cix, 27) | __ciy"
+                f"shiftleft(CAST({res} AS BIGINT), {_RES_SHIFT})"
+                f" | shiftleft(__cix, {_IX_SHIFT}) | __ciy"
             ).alias(cell_col),
         )
     )

@@ -8,8 +8,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 import bench as B  # noqa: E402
 
 
@@ -34,53 +32,19 @@ def main() -> None:
     # 0. scan only
     t("scan.count", lambda: df.count())
 
-    # 1. vertex explode + census
+    # 1. vertex explode + census as star edges
     verts = GPS._explode_vertices(df, include_closing=False)
     t("explode.count", lambda: verts.count())
-    shared_sets_df = (
-        verts.groupBy("vlon", "vlat")
-        .agg(F.collect_set("ref").alias("__refs"))
-        .filter(F.size("__refs") > 1)
-        .select("__refs")
-    )
-    t("census shared_sets.count", lambda: shared_sets_df.count())
+    edges = GPS._shared_vertex_edges(df)
+    t("census edges.count", lambda: edges.count())
 
-    # 2. collect + union-find (driver)
+    # 2. components (driver union-find below the edge cap)
     t0 = time.time()
-    rows = shared_sets_df.collect()
-    print(f"{'collect shared_sets':35s} {time.time()-t0:7.3f} s   -> {len(rows)} rows",
+    comps, n_grouped = GPS._grouped_components(df)
+    print(f"{'components':35s} {time.time()-t0:7.3f} s   -> {n_grouped} refs",
           flush=True)
 
     # 3. full operator pieces: reproduce the internals
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    seen: set[str] = set()
-    t0 = time.time()
-    for row in rows:
-        refs = row["__refs"]
-        seen.update(refs)
-        r0 = find(refs[0])
-        for ref in refs[1:]:
-            r1 = find(ref)
-            if r0 != r1:
-                if r1 < r0:
-                    r0, r1 = r1, r0
-                parent[r1] = r0
-    comps_local = [(ref, find(ref)) for ref in sorted(seen)]
-    print(f"{'driver union-find':35s} {time.time()-t0:7.3f} s   -> {len(comps_local)} refs",
-          flush=True)
-    comps = F.broadcast(
-        spark.createDataFrame(comps_local, schema="ref string, component string")
-    )
-
     singles = df.join(comps, "ref", "left_anti")
     grouped = df.join(comps, "ref")
     t("singles.count", lambda: singles.count())
@@ -91,20 +55,17 @@ def main() -> None:
     )
     t("singles kernel.count", lambda: singles_out.count())
 
-    grouped_out = (
-        grouped.select("ref", "geometry", "component")
-        .repartition(GPS._kernel_partitions(spark, len(comps_local)), "component")
-        .sortWithinPartitions("component", "ref")
-        .mapInPandas(GPS._grouped_fused_mapper, schema=GPS._REMOVE_SCHEMA)
+    grouped_out = GPS._map_components(
+        grouped.select("ref", "geometry", "component"),
+        GPS._fused_group_kernel,
+        GPS._REMOVE_SCHEMA,
+        n_grouped,
     )
     t("grouped kernel.count", lambda: grouped_out.count())
 
     # component size distribution
-    comp_sizes = {}
-    for _, c in comps_local:
-        comp_sizes[c] = comp_sizes.get(c, 0) + 1
-    import collections
-    hist = collections.Counter(comp_sizes.values())
+    sizes = comps.groupBy("component").count().groupBy("count").count()
+    hist = {r[0]: r[1] for r in sizes.collect()}
     print("component size -> count:", dict(sorted(hist.items())[:20]), flush=True)
 
     # full operator end-to-end for reference

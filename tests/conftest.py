@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -15,7 +16,16 @@ def import_reference(name: str):
     Used ONLY to compute expected values in tests (the reference's geometry
     functions are importable pure functions; network mains are guarded by
     __main__). Engine code never imports from the reference.
+
+    Without the reference tree the calling test fails with one message
+    ("reference tree absent") instead of a ModuleNotFoundError.
     """
+    if not os.path.isdir(REFERENCE_PATH):
+        pytest.fail(
+            f"reference tree absent: {REFERENCE_PATH} is needed to import "
+            f"'{name}' for this parity check",
+            pytrace=False,
+        )
     if REFERENCE_PATH not in sys.path:
         sys.path.insert(0, REFERENCE_PATH)
     import importlib

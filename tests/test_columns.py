@@ -18,8 +18,6 @@ from building2osm_spark.functions.columns import (
 from building2osm_spark import cells, geom
 from tests.conftest import import_reference
 
-ref_b2o = import_reference("building2osm")
-
 
 def test_cell_id_col_matches_numpy(spark):
     rng = np.random.default_rng(3)
@@ -55,6 +53,7 @@ def test_distance_col_matches_kernel(spark):
 def test_format_decimal_matches_reference(spark):
     # 0.15/0.35/12.25 are the JVM-vs-CPython divergence cases: shortest-repr
     # HALF_UP vs exact-binary half-even (see format_decimal_col docstring)
+    ref_b2o = import_reference("building2osm")
     vals = [0.0, 1.0, 1.25, 1.201, 99.99, 100.04, 0.06, 3.0, None,
             0.15, 0.25, 0.35, 0.45, 0.75, 12.25, -0.25, -1.25, 2.5]
     df = spark.createDataFrame([(v,) for v in vals], schema="x double")
@@ -123,6 +122,7 @@ def test_retag_merge_chain(spark):
 
 def test_dedupe_consecutive_column_parity():
     # P2 covered in geom tests; sanity: backtrack cascade
+    ref_b2o = import_reference("building2osm")
     vals = np.array([[0, 0], [1, 1], [0, 0], [2, 2]], dtype=float)
     out = geom.dedupe_consecutive(vals)
     want = ref_b2o.parse_polygon("0 0 1 1 0 0 2 2")

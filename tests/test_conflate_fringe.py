@@ -75,6 +75,19 @@ def _corpora(seed=7, n=4_000):
     # within the 20 m bbox), so survivors and non-survivors both exist
     jl = rng.uniform(-3e-4, 3e-4, lat.size)
     jo = rng.uniform(-6e-4, 6e-4, lat.size)
+    # one base above 89.8°, past the fringe's cos(lat) floor, drawn after
+    # the others so their points stay as they were; its longitude spreads
+    # widen by 1/cos(lat) so its points sit metres apart like the others'
+    base_lat, base_lon = 89.85, 10.75
+    k = 1.0 / np.cos(np.radians(base_lat))
+    iy = np.floor((base_lat + 90.0) / cell_h)
+    ix = np.floor((base_lon + 180.0) / cell_w)
+    lat = np.concatenate([lat, (iy * cell_h - 90.0) + rng.uniform(-4e-4, 4e-4, m)])
+    lon = np.concatenate(
+        [lon, (ix * cell_w - 180.0) + rng.uniform(-8e-4 * k, 8e-4 * k, m)]
+    )
+    jl = np.concatenate([jl, rng.uniform(-3e-4, 3e-4, m)])
+    jo = np.concatenate([jo, rng.uniform(-6e-4 * k, 6e-4 * k, m)])
     osm_pdf = pd.DataFrame(
         {"osm_id": np.arange(lat.size, dtype=np.int64), "o_lon": lon, "o_lat": lat}
     )

@@ -100,6 +100,31 @@ def test_greedy_parity_randomized_dense_corpora(spark):
     assert diverged >= 1
 
 
+def test_greedy_propagation_regime_equals_driver_regime(spark, monkeypatch):
+    """The candidate-graph components take the same greedy kernels to the
+    same answer in both physical regimes: with the driver union-find cap
+    at 0, min-label propagation must give conflate_greedy's match set and
+    greedy_debug_spray's tag dict exactly as the driver regime does, seed
+    by seed (no reference needed)."""
+    from building2osm_spark.operators import components as CC
+
+    for seed in range(4):
+        osm_pdf, import_pdf = FX.dense_random_conflation_pdfs(seed=seed)
+        osm = spark.createDataFrame(osm_pdf, schema=FX.OSM_CONFLATE_SCHEMA)
+        imports = spark.createDataFrame(import_pdf, schema=FX.IMPORT_CONFLATE_SCHEMA)
+
+        def run():
+            matched = {(r.osm_id, r.ref) for r in conflate_greedy(osm, imports).collect()}
+            tags = _spray_to_dict(greedy_debug_spray(osm, imports).collect())
+            return matched, tags
+
+        driver = run()
+        assert driver[0] and driver[1]  # corpus sanity: matches and tags
+        with monkeypatch.context() as m:
+            m.setattr(CC, "_DRIVER_MAX_EDGES", 0)
+            assert run() == driver, f"regimes diverged at seed {seed}"
+
+
 def test_greedy_equals_mutual_best_on_unique_best_corpus(spark):
     """On the standard fixture (unique best matches) greedy, mutual-best
     and the reference all agree — default behavior is unchanged."""

@@ -14,10 +14,6 @@ from tests.conftest import import_reference
 
 rng = np.random.default_rng(42)
 
-ref_b2o = import_reference("building2osm")
-ref_merge = import_reference("building_merge")
-ref_split = import_reference("municipality_split")
-
 
 def random_points(n, lon0=10.7, lat0=59.9, spread=0.01):
     return np.stack(
@@ -39,6 +35,7 @@ def random_ring(n=6, lon0=10.7, lat0=59.9, radius_m=20.0):
 
 class TestDistanceBearing:
     def test_distance_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         p = random_points(50)
         q = random_points(50)
         got = geom.distance(p, q)
@@ -47,6 +44,7 @@ class TestDistanceBearing:
             assert got[i] == pytest.approx(want, abs=1e-12)
 
     def test_bearing_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         p = random_points(50)
         q = random_points(50)
         got = geom.bearing(p, q)
@@ -55,6 +53,7 @@ class TestDistanceBearing:
             assert got[i] == pytest.approx(want, abs=1e-10)
 
     def test_bearing_turn_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         a, b, c = random_points(30), random_points(30), random_points(30)
         got = geom.bearing_turn(a, b, c)
         for i in range(30):
@@ -62,6 +61,7 @@ class TestDistanceBearing:
             assert got[i] == pytest.approx(want, abs=1e-10)
 
     def test_coordinate_offset_matches_reference(self):
+        ref_merge = import_reference("building_merge")
         p = random_points(20)
         for d in (-20.0, 5.0, 100.0):
             got = geom.coordinate_offset(p, d)
@@ -73,12 +73,14 @@ class TestDistanceBearing:
 
 class TestAreaCentre:
     def test_area_b2osm_radius(self):
+        ref_b2o = import_reference("building2osm")
         for _ in range(20):
             ring = random_ring(n=int(rng.integers(4, 12)))
             want = ref_b2o.polygon_area([tuple(p) for p in ring])
             assert geom.polygon_area(ring) == want
 
     def test_area_merge_radius(self):
+        ref_merge = import_reference("building_merge")
         for _ in range(20):
             ring = random_ring(n=int(rng.integers(4, 12)))
             want = ref_merge.polygon_area([tuple(p) for p in ring])
@@ -89,6 +91,7 @@ class TestAreaCentre:
         assert geom.polygon_area(ring) == 0
 
     def test_centre(self):
+        ref_b2o = import_reference("building2osm")
         for _ in range(10):
             ring = random_ring()
             want = ref_b2o.polygon_centre([tuple(p) for p in ring])
@@ -97,6 +100,7 @@ class TestAreaCentre:
             assert got[1] == pytest.approx(want[1], abs=1e-13)
 
     def test_centroid_det_weighted(self):
+        ref_merge = import_reference("building_merge")
         for _ in range(10):
             ring = random_ring()
             want = ref_merge.polygon_centroid([tuple(p) for p in ring])
@@ -105,6 +109,7 @@ class TestAreaCentre:
             assert got[1] == pytest.approx(want[1], rel=1e-12)
 
     def test_centroid_hole_aware(self):
+        ref_split = import_reference("municipality_split")
         outer = np.array([[0.0, 0.0], [0.0, 5.0], [5.0, 5.0], [5.0, 0.0], [0.0, 0.0]])
         hole = np.array([[1.0, 1.0], [3.0, 1.0], [3.0, 3.0], [1.0, 3.0], [1.0, 1.0]])
         want = ref_split.centroid_polygon([[tuple(p) for p in outer], [tuple(p) for p in hole]])
@@ -119,6 +124,7 @@ class TestAreaCentre:
 
 class TestLineDistanceHausdorff:
     def test_line_distance_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         for _ in range(50):
             s1, s2, p = random_points(1)[0], random_points(1)[0], random_points(1)[0]
             want = ref_b2o.line_distance(tuple(s1), tuple(s2), tuple(p))
@@ -126,12 +132,14 @@ class TestLineDistanceHausdorff:
             assert got == pytest.approx(want, abs=1e-9)
 
     def test_line_distance_zero_length_segment(self):
+        ref_b2o = import_reference("building2osm")
         s = np.array([10.7, 59.9])
         p = np.array([10.7005, 59.9005])
         want = ref_b2o.line_distance(tuple(s), tuple(s), tuple(p))
         assert geom.line_distance(s, s, p) == pytest.approx(want, abs=1e-9)
 
     def test_hausdorff_matches_reference(self):
+        ref_merge = import_reference("building_merge")
         for _ in range(25):
             r1 = random_ring(n=int(rng.integers(4, 10)))
             r2 = random_ring(n=int(rng.integers(4, 10)), lon0=10.7002, lat0=59.9001)
@@ -168,6 +176,7 @@ class TestPIP:
         assert not geom.points_in_polygon(np.array([[2.0, 2.0]]), [outer, hole])[0]
 
     def test_vectorized_matches_reference(self):
+        ref_split = import_reference("municipality_split")
         ring = random_ring(n=8)
         pts = random_points(200, spread=0.02)
         got = geom.points_in_ring(pts, ring)
@@ -194,6 +203,7 @@ class TestPIP:
 
 class TestSimplify:
     def test_rdp_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         for _ in range(20):
             ring = random_ring(n=int(rng.integers(6, 20)))
             for eps in (0.05, 0.5, 2.0):
@@ -219,6 +229,7 @@ class TestSimplify:
 
 class TestParse:
     def test_dedupe_consecutive_matches_reference(self):
+        ref_b2o = import_reference("building2osm")
         coords = "10.1 59.1 10.2 59.2 10.2 59.2 10.3 59.3 10.2 59.2 10.4 59.4"
         want = ref_b2o.parse_polygon(coords)
         vals = np.array([float(v) for v in coords.split(" ")]).reshape(-1, 2)

@@ -81,10 +81,11 @@ def test_rectify_relocated_and_reason_surface(spark):
 
 
 def test_fused_fallback_label_propagation_equals_driver_path(spark, monkeypatch):
-    """Force the distributed component fallback (as if >_CC_DRIVER_MAX
-    shared vertices) and assert it returns exactly the driver-union-find
-    path's rows."""
-    from building2osm_spark.operators import geometry_passes as GPS
+    """Force the distributed component fallback (as if more than
+    components._DRIVER_MAX_EDGES shared-vertex edges) and assert it
+    returns exactly the driver-union-find path's rows — for the fused
+    pass and for the public connected_components."""
+    from building2osm_spark.operators import components as CC
 
     geometries = FX.building_geometries(140)
     df = spark.createDataFrame(
@@ -92,11 +93,14 @@ def test_fused_fallback_label_propagation_equals_driver_path(spark, monkeypatch)
         schema=f"ref string, geometry {FX.GEOMETRY_POLYGON_T}",
     )
     fast = rectify_and_simplify(df)
-    monkeypatch.setattr(GPS, "_CC_DRIVER_MAX", 0)
-    slow = GPS.rectify_and_simplify(df)
+    fast_cc = connected_components(df)
+    monkeypatch.setattr(CC, "_DRIVER_MAX_EDGES", 0)
+    slow = rectify_and_simplify(df)
+    slow_cc = connected_components(df)
     a = {(r["ref"], str(r["geometry"]), r["rectified"], r["n_removed"]) for r in fast.collect()}
     b = {(r["ref"], str(r["geometry"]), r["rectified"], r["n_removed"]) for r in slow.collect()}
     assert a == b
+    assert sorted(map(tuple, fast_cc.collect())) == sorted(map(tuple, slow_cc.collect()))
 
 
 def test_fused_plan_single_exchange_on_grouped_branch(spark):

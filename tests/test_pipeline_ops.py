@@ -505,7 +505,9 @@ def test_pair_components_and_keep_best(spark, monkeypatch):
     }
     assert got_driver == expected
 
-    monkeypatch.setattr(DDm, "_CLUSTER_DRIVER_MAX", 0)
+    from building2osm_spark.operators import components as CC
+
+    monkeypatch.setattr(CC, "_DRIVER_MAX_EDGES", 0)
     got_dist = {r.node: r.cluster for r in DDm.pair_components(pairs).collect()}
     assert got_dist == expected
     # non-convergence raises rather than splitting (diameter 4 > 2*1)

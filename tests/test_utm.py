@@ -16,8 +16,6 @@ import pytest
 from building2osm_spark import utm
 from tests.conftest import import_reference
 
-ref_utm = import_reference("utm")
-
 
 def test_roundtrip_subnanometre():
     rng = np.random.default_rng(11)
@@ -30,6 +28,7 @@ def test_roundtrip_subnanometre():
 
 
 def test_matches_reference_forward():
+    ref_utm = import_reference("utm")
     rng = np.random.default_rng(12)
     lat = rng.uniform(58.0, 70.0, 100)
     lon = rng.uniform(9.0, 21.0, 100)   # ±6° of the zone-33 central meridian
@@ -42,6 +41,7 @@ def test_matches_reference_forward():
 
 def test_matches_reference_inverse():
     # cadastral flow: UtmToLatLon(x, y, 33, "N") at building2osm.py:620
+    ref_utm = import_reference("utm")
     rng = np.random.default_rng(13)
     e = rng.uniform(200000.0, 800000.0, 100)
     n = rng.uniform(6500000.0, 7800000.0, 100)
